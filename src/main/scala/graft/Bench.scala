@@ -63,6 +63,8 @@ object Bench {
     // not as a wall of identical per-query failures below.
     graft.sources.DataContract.report(spark, sfDir)
       .foreach(l => System.err.println(s"[contract] $l"))
+    val localFs = graft.sources.LocalFs.resolved(spark)
+    System.err.println(s"[contract] file:// -> $localFs")
     // JIT/codegen/page-cache warmup on the smallest inputs: one silent
     // pass of every query at sf0.001 (measurement below is sfDir).
     // DEFAULT OFF since round 11: with best-of-two measured passes the
@@ -160,12 +162,13 @@ object Bench {
     val adjudicated = warnRegressions(results.toMap,
       (n: String) => fns.get(n).map(fn => timeOne(spark, n, fn)))
     phase("adjudication")
-    printJson(results.toMap, isolated, sfDir, adjudicated)
+    printJson(results.toMap, isolated, sfDir, adjudicated, cpus, shuffle, localFs)
     spark.stop()
   }
 
   private def printJson(qs: Map[String, Double], iso: Map[String, Double], sf: String,
-                        hostFactor: Double): Unit = {
+                        hostFactor: Double, cpus: String, shuffle: String,
+                        localFs: String): Unit = {
     def obj(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = qs.values.filter(_ >= 0).sum
@@ -178,9 +181,13 @@ object Bench {
     // per-query ratio vs the best-prior anchors (tools/bench_best.json)
     // — divide by it before comparing rounds. hostname/cpus identify
     // the provision; -1.0 factor means no anchors were readable.
+    // cpus and shuffle are the run's effective local[N] and shuffle
+    // width, not the machine's core count; fs names the classes
+    // file:// resolved to (Hadoop's stock classes mean the JVM was
+    // launched without build.sbt's javaOptions).
     val hostName = try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
     val hostPart =
-      f""","host":{"name":"$hostName","cpus":${Runtime.getRuntime.availableProcessors()},"factor_vs_best":$hostFactor%.3f}"""
+      f""","host":{"name":"$hostName","cpus":$cpus,"shuffle":$shuffle,"fs":"$localFs","factor_vs_best":$hostFactor%.3f}"""
     // Self-contained artifact FIRST: the full per-query map at this
     // query count (>400) overflows the driver's fixed-size stdout
     // capture, so it lives in a file, never on stdout (BENCH_r06–r09

@@ -34,6 +34,7 @@ object Verify {
     // an unexpected physical type (round 5: events.ts nanos→µs), fail
     // loudly with ONE named diagnosis instead of 50 identical stack traces.
     graft.sources.DataContract.report(spark, sfDir).foreach(l => println(s"[contract] $l"))
+    println(s"[contract] file:// -> ${graft.sources.LocalFs.resolved(spark)}")
     // deterministic name order (hash-map order shifts when queries are
     // added, which once let an order-dependent session-state bug hide)
     SparkEntry.queries.toSeq.sortBy(_._1).filter(t => nameFilter(t._1)).foreach { case (name, fn) =>

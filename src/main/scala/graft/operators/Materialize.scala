@@ -30,7 +30,8 @@ private[graft] object Materialize {
     val path = s"$base/graft-spill-${java.util.UUID.randomUUID()}"
     result.write.mode("overwrite").parquet(path)
     release.foreach(_.unpersist())
-    spark.read.parquet(path)
+    // the schema just written: inferring it back costs a footer-read job
+    spark.read.schema(result.schema).parquet(path)
   }
 
   /** Per-JVM scratch path for query-built fixtures (IVF index, decoded

@@ -1,6 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the harness parquet tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -31,7 +38,7 @@ object Tables {
     * validation and can be evicted explicitly via [[invalidate]].
     */
   private final case class SchemaEntry(mtime: Long, size: Long,
-      schema: org.apache.spark.sql.types.StructType)
+      schema: StructType)
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, SchemaEntry]()
 
@@ -47,13 +54,39 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val (m, sz) = statLocal(path)
     val cached = schemaCache.get(path)
-    if (cached != null && cached.mtime == m && cached.size == sz)
-      spark.read.schema(cached.schema).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, SchemaEntry(m, sz, df.schema))
-      df
-    }
+    val schema =
+      if (cached != null && cached.mtime == m && cached.size == sz) cached.schema
+      else {
+        val s = footerSchema(spark, path)
+        schemaCache.put(path, SchemaEntry(m, sz, s))
+        s
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read directly
+    * from one footer with no Spark job. Spark's inference runs a
+    * one-task job per call (`SchemaMergeUtils.mergeSchemasInParallel`)
+    * to read that same footer; reading it here saves a job per table.
+    * Same rule as Spark
+    * without schema merging: the Spark row-metadata key when the writer
+    * stored one, else the footer's parquet schema converted under the
+    * session's confs (nanosAsLong, inferTimestampNTZ, ...); for a
+    * directory, its first data file by name.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = if (!fs.getFileStatus(root).isDirectory) root else
+      fs.listStatus(root).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

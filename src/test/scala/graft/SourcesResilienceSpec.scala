@@ -70,6 +70,29 @@ class SourcesResilienceSpec extends SparkSpec {
       .head().getLong(0) > 0)
   }
 
+  test("footer schema equals Spark's inferred schema: every table and a spill read-back") {
+    val sf = freshDir()
+    copyFixtures(sf, Tables.names)
+    Tables.names.foreach { n =>
+      assert(Tables.table(spark, sf, n).schema == spark.read.parquet(s"$sf/$n.parquet").schema, n)
+    }
+    // a Spark-written directory: the row-metadata key path
+    val dir = freshDir()
+    spark.range(5).select(col("id").as("r_regionkey"), col("id").cast("int").as("i"),
+        array(col("id")).as("arr"), struct(col("id").as("a")).as("st"),
+        lit(null).cast("string").as("n"))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    assert(Tables.table(spark, dir, "region").schema ==
+      spark.read.parquet(s"$dir/region.parquet").schema)
+    // Materialize.spillRelease reads its spill back with the written schema
+    val spilled = graft.operators.Materialize.spillRelease(
+      Tables.table(spark, sf, "orders").groupBy("o_orderstatus")
+        .agg(count(lit(1)).as("n"), max("o_orderdate").as("d"), collect_set("o_custkey").as("cs")))
+    val spillDir = new org.apache.hadoop.fs.Path(spilled.inputFiles.head).getParent.toString
+    assert(spilled.schema == spark.read.parquet(spillDir).schema)
+    assert(spilled.count() == Tables.orders(spark, sf).select("o_orderstatus").distinct().count())
+  }
+
   test("data-contract canary reports OK for harness fixtures and FAIL for a broken table") {
     val okLines = graft.sources.DataContract.report(spark, "/root/testdata/sf0.001")
     assert(okLines.size == Tables.names.size)

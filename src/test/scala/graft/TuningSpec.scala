@@ -29,6 +29,23 @@ class TuningSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Tuning.shufflePartitions("/nonexistent", 32) == 32)
   }
 
+  test("tools/run_bench.sh passes every -D and -XX entry of build.sbt's javaOptions") {
+    // run_bench.sh launches graft mains with plain java, outside sbt, so
+    // it copies these flags by hand; a flag missing there (the file://
+    // filesystem ones, say) silently changes what a paired run measures
+    def read(p: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8)
+    val sbt = read("build.sbt")
+    val block = sbt.substring(sbt.indexOf("javaOptions ++="))
+    val opts = "\"(-D[^\"]+|-XX[^\"]+)\"".r
+      .findAllMatchIn(block.substring(0, block.indexOf("\n)"))).map(_.group(1)).toSeq
+    assert(opts.exists(_.startsWith("-Dspark.hadoop.fs.file.impl=")), opts)
+    assert(opts.exists(_.startsWith("-XX:ReservedCodeCacheSize=")), opts)
+    val script = read("tools/run_bench.sh")
+    val missing = opts.filterNot(script.contains)
+    assert(missing.isEmpty, s"build.sbt javaOptions missing from tools/run_bench.sh: $missing")
+  }
+
   test("dirBytes walks recursively and returns a positive size for real data") {
     assert(Tuning.dirBytes("/root/testdata/sf0.001") > 0L)
   }

@@ -24,6 +24,8 @@ if [ -z "$SPARK_DRIVER_MEM" ] && [ -n "$SPARK_GRAFT_SF_DIR" ] && [ -d "$SPARK_GR
     if [ "$WANT_MB" -gt 16384 ]; then SPARK_DRIVER_MEM="${WANT_MB}m"; fi
   fi
 fi
+# JVM flags mirror build.sbt's javaOptions; TuningSpec fails when a -D or
+# -XX entry there is missing here.
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -42,5 +44,7 @@ exec java \
   ${GRAFT_JAVA_OPTS:-} \
   -Xmx${SPARK_DRIVER_MEM:-16g} \
   -XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing \
+  -Dspark.hadoop.fs.file.impl=graft.sources.CheckedLocalFs \
+  -Dspark.hadoop.fs.AbstractFileSystem.file.impl=graft.sources.CheckedLocalAbstractFs \
   -cp "${GRAFT_CP:-$ROOT/target/scala-2.13/classes}:/opt/spark/jars/*" \
   "$MAIN" "$@"
